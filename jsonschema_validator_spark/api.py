@@ -17,12 +17,18 @@ DataFrame (driver round-trip — milliseconds; this is the convenience
 path, not the scale path); ``validate_many`` is the same compiled plan
 applied to a whole DataFrame column, which is the scale path and the
 reason the engine exists.
+
+Compile once / validate many covers the Spark plan too, not only the
+keyword compile: ``Schema`` and ``SchemaRegistry`` build the plan's
+Column tree (parse/tag/object projections, every check, the dispatch)
+once per input schema, on the first call, and every later call on an
+equal schema only applies the cached Columns to the incoming DataFrame.
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -79,12 +85,57 @@ def _tmp_prefix(df: DataFrame) -> str:
     return base if k == 0 else f"__jsv{k}_"
 
 
-def _bind_variant(df: DataFrame, json_col: str, prop_names: list[str]):
+@dataclass
+class _Plan:
+    """The Columns an entry point applies to every DataFrame of one input
+    schema: the parse/tag/object projections (one ``withColumns`` per
+    dependency level), the accessor reading them, the parse-ok flag, the
+    temp columns to drop, and the output Columns (validity, violations)
+    built over the accessor on first use. Column expressions are
+    unresolved and depend only on the input schema, so one plan serves
+    every later call on an equal schema: the reference's compile-once /
+    validate-many contract (its scope cache, src/types/scope_builder.rs)
+    carried through to the Spark plan."""
+
+    levels: list[dict[str, Column]]
+    acc: _BoundVariantAccessor
+    pok: Column
+    tmp: list[str]
+    outputs: dict = field(default_factory=dict)
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        for level in self.levels:
+            df = df.withColumns(level)
+        return df
+
+    def output(self, name: str, build):
+        """The output ``name``, built by ``build(plan)`` on first use."""
+        if name not in self.outputs:
+            self.outputs[name] = build(self)
+        return self.outputs[name]
+
+
+def _cached_plan(
+    memo: dict, df: DataFrame, json_col: str, prop_names: list[str], key_col: str | None = None
+) -> _Plan:
+    """The memoized ``_Plan`` for ``df``'s schema. The key holds the input
+    schema because the temp prefix (``_tmp_prefix``) depends on its
+    columns."""
+    key = (df.schema.json(), key_col, json_col)
+    plan = memo.get(key)
+    if plan is None:
+        plan = memo[key] = _bind_variant(df, json_col, prop_names)
+    return plan
+
+
+def _bind_variant(df: DataFrame, json_col: str, prop_names: list[str]) -> _Plan:
     """Parse the JSON column ONCE and project the accessor's expensive
     derivations as columns — the document tag/object map, plus each
     named top-level property's sub-variant and tag (the property set is
     known at compile time). Every check expression then reads the
-    shared columns instead of re-deriving variant metadata.
+    shared columns instead of re-deriving variant metadata. The
+    projections come in six dependency levels (parse; tag + parse-ok;
+    object map; field; field tag; field object), each one Project.
 
     Also projects a parse-ok flag: a NON-NULL string that
     ``try_parse_json`` cannot parse is a document that failed to
@@ -98,37 +149,37 @@ def _bind_variant(df: DataFrame, json_col: str, prop_names: list[str]):
     properties — one parse serves every dispatch branch)."""
     p = _tmp_prefix(df)
     pv, tg, ob, pok = p + "pv", p + "tag", p + "obj", p + "pok"
-    out = (
-        df.withColumn(pv, F.try_parse_json(F.col(json_col)))
-        .withColumn(tg, _vtag(F.col(pv)))
-        .withColumn(
-            ob,
-            F.when(
-                F.col(tg) == "object",
-                F.try_variant_get(F.col(pv), "$", "map<string,variant>"),
-            ),
+
+    def obj_of(variant: str, tag: str) -> Column:
+        return F.when(
+            F.col(tag) == "object",
+            F.try_variant_get(F.col(variant), "$", "map<string,variant>"),
         )
-        .withColumn(pok, ~(F.col(json_col).isNotNull() & F.col(pv).isNull()))
+
+    fc = [f"{p}f{i}" for i in range(len(prop_names))]
+    ft = [f"{p}ft{i}" for i in range(len(prop_names))]
+    fo = [f"{p}fo{i}" for i in range(len(prop_names))]
+    levels = [
+        {pv: F.try_parse_json(F.col(json_col))},
+        {
+            tg: _vtag(F.col(pv)),
+            pok: ~(F.col(json_col).isNotNull() & F.col(pv).isNull()),
+        },
+        {ob: obj_of(pv, tg)},
+        {c: F.try_element_at(F.col(ob), F.lit(n)) for c, n in zip(fc, prop_names)},
+        {t: _vtag(F.col(c)) for c, t in zip(fc, ft)},
+        {o: obj_of(c, t) for c, t, o in zip(fc, ft, fo)},
+    ]
+    fields: dict[str, VariantAccessor] = {
+        n: _BoundVariantAccessor(F.col(c), F.col(t), F.col(o))
+        for n, c, t, o in zip(prop_names, fc, ft, fo)
+    }
+    return _Plan(
+        levels=[lv for lv in levels if lv],
+        acc=_BoundVariantAccessor(F.col(pv), F.col(tg), F.col(ob), fields),
+        pok=F.col(pok),
+        tmp=[pv, tg, ob, pok, *fc, *ft, *fo],
     )
-    tmp = [pv, tg, ob, pok]
-    fields: dict[str, VariantAccessor] = {}
-    for i, name in enumerate(prop_names):
-        fc, ft, fo = f"{p}f{i}", f"{p}ft{i}", f"{p}fo{i}"
-        out = (
-            out.withColumn(fc, F.try_element_at(F.col(ob), F.lit(name)))
-            .withColumn(ft, _vtag(F.col(fc)))
-            .withColumn(
-                fo,
-                F.when(
-                    F.col(ft) == "object",
-                    F.try_variant_get(F.col(fc), "$", "map<string,variant>"),
-                ),
-            )
-        )
-        fields[name] = _BoundVariantAccessor(F.col(fc), F.col(ft), F.col(fo))
-        tmp += [fc, ft, fo]
-    acc = _BoundVariantAccessor(F.col(pv), F.col(tg), F.col(ob), fields)
-    return out, acc, tmp, F.col(pok)
 
 
 @dataclass(frozen=True)
@@ -202,6 +253,8 @@ class Schema:
         # schema.rs:46-57); runtime never sees a malformed schema
         self._checks = compile_schema(raw_schema, scope)
         self._fused = pred_of(self._checks)
+        #: input schema -> the Spark plan's Columns, built on first use
+        self._plans: dict[tuple, _Plan] = {}
 
     # -- constructors ----------------------------------------------------
     @classmethod
@@ -233,36 +286,34 @@ class Schema:
     def _row_df(self, value) -> DataFrame:
         return self.spark.createDataFrame([(json.dumps(value),)], "j string")
 
-    @staticmethod
-    def _tmp_prefix(df: DataFrame) -> str:
-        """Temp-column prefix guaranteed not to prefix-collide with any
-        existing column, so ``drop(*tmp)`` can never eat user data (a
-        fixed ``__jsv_`` prefix would silently replace-and-drop a user
-        column of the same name)."""
-        return _tmp_prefix(df)
-
-    def _bind(self, df: DataFrame, json_col: str):
+    def _plan(self, df: DataFrame, json_col: str) -> _Plan:
         props = self.raw.get("properties", {}) if isinstance(self.raw, dict) else {}
-        return _bind_variant(df, json_col, list(props))
+        return _cached_plan(self._plans, df, json_col, list(props))
+
+    def _valid(self, plan: _Plan) -> Column:
+        return plan.pok & F.coalesce(self._fused(plan.acc), F.lit(True))
 
     def is_valid(self, value) -> bool:
         """Fused boolean only — no per-keyword error materialization
         (the short-circuit fast path, keywords/mod.rs:30-32: "1 or 100
         errors does not change the answer but just the execution time")."""
-        bound, acc, tmp, pok = self._bind(self._row_df(value), "j")
-        row = bound.select(
-            (pok & F.coalesce(self._fused(acc), F.lit(True))).alias("ok")
-        ).first()
-        return bool(row["ok"])
+        df = self._row_df(value)
+        plan = self._plan(df, "j")
+        ok = plan.output("valid", self._valid)
+        return bool(plan.bind(df).select(ok.alias("ok")).first()["ok"])
 
     def validation_errors(self, value) -> list[ValidationError]:
         """ALL failing keywords with their paths/messages, evaluated in
         one job (one flag column per compiled check)."""
         if not self._checks:
             return []
-        bound, acc, tmp, _pok = self._bind(self._row_df(value), "j")
-        flags = [c.gated(acc).alias(f"f{i}") for i, c in enumerate(self._checks)]
-        row = bound.select(*flags).first()
+        df = self._row_df(value)
+        plan = self._plan(df, "j")
+        flags = plan.output(
+            "flags",
+            lambda p: [c.gated(p.acc).alias(f"f{i}") for i, c in enumerate(self._checks)],
+        )
+        row = plan.bind(df).select(*flags).first()
         return [
             ValidationError(c.message, c.keyword, c.path)
             for i, c in enumerate(self._checks)
@@ -294,45 +345,44 @@ class Schema:
         parse/tag/object projections shared across all checks.
         Unparseable non-null JSON yields ``False`` (null stays
         vacuously valid — absent document)."""
-        bound, acc, tmp, pok = self._bind(df, json_col)
-        return bound.withColumn(
-            out_col, pok & F.coalesce(self._fused(acc), F.lit(True))
-        ).drop(*tmp)
+        plan = self._plan(df, json_col)
+        valid = plan.output("valid", self._valid)
+        return plan.bind(df).withColumn(out_col, valid).drop(*plan.tmp)
+
+    def _violations(self, plan: _Plan) -> Column:
+        # parse failure precedes keyword evaluation: one synthetic
+        # "parse" violation, and no keyword violations are reported for
+        # a document that never parsed (they'd all be vacuous anyway)
+        pok, acc = plan.pok, plan.acc
+        structs = [F.when(~pok, _violation("parse", "", "Invalid JSON document"))] + [
+            F.when(pok & ~c.gated(acc), _violation(c.keyword, c.path, c.message))
+            for c in self._checks
+        ]
+        return F.filter(F.array(*structs), lambda x: x.isNotNull())
 
     def validate_many(self, df: DataFrame, json_col: str = "j") -> DataFrame:
         """df + ``valid`` boolean + ``violations`` array<struct<keyword,
         path,message>> — the whole compiled validator applied to every
         row in one pass (no per-row Python; one plan, N documents)."""
-        bound, acc, tmp, pok = self._bind(df, json_col)
-        # parse failure precedes keyword evaluation: one synthetic
-        # "parse" violation, and no keyword violations are reported for
-        # a document that never parsed (they'd all be vacuous anyway)
-        structs = [
-            F.when(
-                ~pok,
-                F.struct(
-                    F.lit("parse").alias("keyword"),
-                    F.lit("").alias("path"),
-                    F.lit("Invalid JSON document").alias("message"),
-                ),
-            )
-        ] + [
-            F.when(
-                pok & ~c.gated(acc),
-                F.struct(
-                    F.lit(c.keyword).alias("keyword"),
-                    F.lit(c.path).alias("path"),
-                    F.lit(c.message).alias("message"),
-                ),
-            )
-            for c in self._checks
-        ]
-        viol = F.filter(F.array(*structs), lambda x: x.isNotNull())
-        return (
-            bound.withColumn("violations", viol)
-            .withColumn("valid", F.size("violations") == 0)
-            .drop(*tmp)
-        )
+        plan = self._plan(df, json_col)
+        return _with_violations(plan, df, plan.output("violations", self._violations))
+
+
+def _violation(keyword: str, path: str, message: str) -> Column:
+    return F.struct(
+        F.lit(keyword).alias("keyword"),
+        F.lit(path).alias("path"),
+        F.lit(message).alias("message"),
+    )
+
+
+def _with_violations(plan: _Plan, df: DataFrame, viol: Column) -> DataFrame:
+    return (
+        plan.bind(df)
+        .withColumn("violations", viol)
+        .withColumn("valid", F.size("violations") == 0)
+        .drop(*plan.tmp)
+    )
 
 
 class SchemaRegistry:
@@ -347,7 +397,8 @@ class SchemaRegistry:
     class compiles every member schema once, binds the parse/tag/object
     projection ONCE (over the union of all member schemas' top-level
     properties), and dispatches with a single CASE chain — one pass,
-    one parse, zero shuffles, whatever K is.
+    one parse, zero shuffles, whatever K is. The dispatch Columns are
+    built once per input schema and reused by every later call.
 
     Scale: the dispatch is a pure projection (no exchange in the plan);
     K only widens the whole-stage-codegen expression, it never adds a
@@ -361,6 +412,7 @@ class SchemaRegistry:
         #: verdict for rows whose key matches no registered schema
         #: (False = closed-world: an unknown tool is itself a violation)
         self.unknown_key_valid = unknown_key_valid
+        self._plans: dict[tuple, _Plan] = {}
 
     @classmethod
     def create(
@@ -387,6 +439,9 @@ class SchemaRegistry:
                     seen.setdefault(name)
         return list(seen)
 
+    def _plan(self, df: DataFrame, key_col: str, json_col: str) -> _Plan:
+        return _cached_plan(self._plans, df, json_col, self._prop_union(), key_col)
+
     def valid_branch(self, acc, key_col: Column) -> Column:
         """The CASE dispatch over a bound accessor (parse-ok NOT
         included — callers gate on it)."""
@@ -407,43 +462,32 @@ class SchemaRegistry:
         ``schemas[df[key_col]_i]``. A NULL key counts as unknown; a
         non-null payload that fails to parse is invalid regardless of
         key (parse precedes keyword evaluation, as in ``Schema``)."""
-        bound, acc, tmp, pok = _bind_variant(df, json_col, self._prop_union())
-        return bound.withColumn(
-            out_col, pok & self.valid_branch(acc, F.col(key_col))
-        ).drop(*tmp)
+        plan = self._plan(df, key_col, json_col)
+        valid = plan.output(
+            "valid", lambda p: p.pok & self.valid_branch(p.acc, F.col(key_col))
+        )
+        return plan.bind(df).withColumn(out_col, valid).drop(*plan.tmp)
 
-    def validate_many(self, df: DataFrame, key_col: str, json_col: str) -> DataFrame:
-        """df + ``valid`` boolean + ``violations`` array<struct<keyword,
-        path,message>> — ``Schema.validate_many`` with per-key dispatch:
-        each row's violations come from the schema its key selects.
-        Parse failure yields the single synthetic "parse" violation; an
-        unknown (or NULL) key yields a "dispatch" violation under the
-        closed world, or no violations when ``unknown_key_valid``."""
-        bound, acc, tmp, pok = _bind_variant(df, json_col, self._prop_union())
+    def _violations(self, plan: _Plan, key: Column) -> Column:
+        acc = plan.acc
         empty = F.array().cast(
             "array<struct<keyword:string,path:string,message:string>>"
         )
-
-        def _viol_array(schema: Schema) -> Column:
-            if not schema._checks:
-                return empty
-            structs = [
-                F.when(
-                    ~c.gated(acc),
-                    F.struct(
-                        F.lit(c.keyword).alias("keyword"),
-                        F.lit(c.path).alias("path"),
-                        F.lit(c.message).alias("message"),
-                    ),
-                )
-                for c in schema._checks
-            ]
-            return F.filter(F.array(*structs), lambda x: x.isNotNull())
-
-        key = F.col(key_col)
         branch = None
         for k, s in self.schemas.items():
-            arr = _viol_array(s)
+            arr = (
+                F.filter(
+                    F.array(
+                        *[
+                            F.when(~c.gated(acc), _violation(c.keyword, c.path, c.message))
+                            for c in s._checks
+                        ]
+                    ),
+                    lambda x: x.isNotNull(),
+                )
+                if s._checks
+                else empty
+            )
             branch = (
                 F.when(key == F.lit(k), arr)
                 if branch is None
@@ -452,29 +496,22 @@ class SchemaRegistry:
         unknown = (
             empty
             if self.unknown_key_valid
-            else F.array(
-                F.struct(
-                    F.lit("dispatch").alias("keyword"),
-                    F.lit("").alias("path"),
-                    F.lit("No schema registered for key").alias("message"),
-                )
-            )
+            else F.array(_violation("dispatch", "", "No schema registered for key"))
         )
-        viol = F.when(
-            ~pok,
-            F.array(
-                F.struct(
-                    F.lit("parse").alias("keyword"),
-                    F.lit("").alias("path"),
-                    F.lit("Invalid JSON document").alias("message"),
-                )
-            ),
+        return F.when(
+            ~plan.pok, F.array(_violation("parse", "", "Invalid JSON document"))
         ).otherwise(branch.otherwise(unknown))
-        return (
-            bound.withColumn("violations", viol)
-            .withColumn("valid", F.size("violations") == 0)
-            .drop(*tmp)
-        )
+
+    def validate_many(self, df: DataFrame, key_col: str, json_col: str) -> DataFrame:
+        """df + ``valid`` boolean + ``violations`` array<struct<keyword,
+        path,message>> — ``Schema.validate_many`` with per-key dispatch:
+        each row's violations come from the schema its key selects.
+        Parse failure yields the single synthetic "parse" violation; an
+        unknown (or NULL) key yields a "dispatch" violation under the
+        closed world, or no violations when ``unknown_key_valid``."""
+        plan = self._plan(df, key_col, json_col)
+        viol = plan.output("violations", lambda p: self._violations(p, F.col(key_col)))
+        return _with_violations(plan, df, viol)
 
 
 def violation_summary(

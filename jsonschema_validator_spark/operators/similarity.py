@@ -809,9 +809,12 @@ def knn_label_agreement(
             nv = np.linalg.norm(V, axis=1, keepdims=True)
             with np.errstate(divide="ignore", invalid="ignore"):
                 Vn = np.where(nv > 0, V / nv, 0.0)
-            S = Vn @ b_mat.T
             qids = pdf["__id"].to_numpy()
             qlabs = pdf["__lab"].to_numpy()
+            if kk <= 0:  # a one-row corpus: no neighbor to agree with
+                yield pd.DataFrame({"qlab": qlabs, "agree": [None] * len(pdf)})
+                continue
+            S = Vn @ b_mat.T
             agrees = []
             for i in range(len(pdf)):
                 s = S[i].copy()
@@ -820,11 +823,12 @@ def knn_label_agreement(
                 cand = np.flatnonzero(s >= kth)
                 # (sim DESC, id ASC) exactly, including k-th-place ties
                 cand = cand[np.lexsort((b_ids[cand], -s[cand]))][:kk]
-                if qlabs[i] is None:
+                # Arrow hands a nullable int label over as float NaN
+                if pd.isna(qlabs[i]):
                     agrees.append(None)  # AVG over all-NULL equality
                     continue
                 nlabs = b_labs[cand]
-                valid = np.array([x is not None for x in nlabs])
+                valid = ~pd.isna(nlabs)
                 if not valid.any():
                     agrees.append(None)
                     continue

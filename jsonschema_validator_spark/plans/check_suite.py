@@ -148,6 +148,16 @@ def _column_of(path: str) -> str:
     return seg.split("/")[0] if seg else ""
 
 
+def _violation_struct(column: str, keyword: str, message, path: str):
+    """One violation struct; ``message`` is a literal or a Column."""
+    return F.struct(
+        F.lit(column).alias("column"),
+        F.lit(keyword).alias("keyword"),
+        (F.lit(message) if isinstance(message, str) else message).alias("message"),
+        F.lit(path).alias("path"),
+    )
+
+
 class CheckSuite:
     def __init__(self, spec: dict, spec_path: str | None = None):
         """spec_path (optional): filesystem location of the spec document.
@@ -161,7 +171,7 @@ class CheckSuite:
         self.partition_by = spec.get("partition_by", "day")
         self.keys = spec.get("keys", ["conv_id", "turn_idx"])
         self._checks: list[CheckExpr] | None = None
-        self._flag_memo: dict[str, list] = {}
+        # Columns by (what, input schema): pass A/B, row flags, violations
         self._expr_memo: dict[tuple, object] = {}
         for d in spec.get("dataset", []):
             if d.get("check") not in DATASET_CHECKS:
@@ -231,12 +241,12 @@ class CheckSuite:
         (driver-serial, py4j-heavy) construction happens once per schema —
         the reference's compile-once / validate-many contract
         (/root/reference/src/types/scope_builder.rs:43-54)."""
-        key = df.schema.json()
-        cached = self._flag_memo.get(key)
+        key = ("flags", df.schema.json())
+        cached = self._expr_memo.get(key)
         if cached is None:
             acc = RowAccessor(df.schema)
             cached = [(ce, ce.gated(acc)) for ce in self._checks]
-            self._flag_memo[key] = cached
+            self._expr_memo[key] = cached
         return cached
 
     @staticmethod
@@ -636,46 +646,22 @@ class CheckSuite:
         tally (the reference's lazy-error-iterator intent,
         /root/reference/README.md:26)."""
         self._require_built()
-        part = self.partition_by
-        k1, k2 = self.keys
         out: list[DataFrame] = []
 
-        flags = self._flag_cols(df)
-        if flags:
+        memo_key = ("violations", df.schema.json())
+        row_sel = self._expr_memo.get(memo_key)
+        if row_sel is None:
             structs = [
                 F.when(
                     ~c,
-                    F.struct(
-                        F.lit(_column_of(ce.path)).alias("column"),
-                        F.lit(ce.keyword).alias("keyword"),
-                        F.lit(ce.message).alias("message"),
-                        F.lit(ce.path).alias("path"),
-                    ),
+                    _violation_struct(_column_of(ce.path), ce.keyword, ce.message, ce.path),
                 )
-                for ce, c in flags
+                for ce, c in self._flag_cols(df)
             ]
-            rows = (
-                df.select(
-                    F.col(k1).alias("conv_id"),
-                    F.col(k2).cast("int").alias("turn_idx"),
-                    F.col(part).alias("day"),
-                    F.array_compact(F.array(*structs)).alias("v"),
-                )
-                .filter(F.size("v") > 0)
-                .select(
-                    "conv_id", "turn_idx", F.explode("v").alias("e"), "day"
-                )
-                .select(
-                    "conv_id",
-                    "turn_idx",
-                    F.col("e.column").alias("column"),
-                    F.col("e.keyword").alias("keyword"),
-                    F.col("e.message").alias("message"),
-                    F.col("e.path").alias("path"),
-                    "day",
-                )
-            )
-            out.append(rows)
+            row_sel = self._violation_rows(F.array_compact(F.array(*structs))) if structs else []
+            self._expr_memo[memo_key] = row_sel
+        if row_sel:
+            out.append(self._explode_violations(df.select(*row_sel)))
 
         dataset = list(self.spec.get("dataset", []))
         fused_idx: set[int] = set()
@@ -716,6 +702,35 @@ class CheckSuite:
             )
         return res
 
+    def _violation_rows(self, v) -> list:
+        """Select list of one row per input row: its keys, its partition
+        and ``v``, its array of violation structs."""
+        k1, k2 = self.keys
+        return [
+            F.col(k1).alias("conv_id"),
+            F.col(k2).cast("int").alias("turn_idx"),
+            F.col(self.partition_by).alias("day"),
+            v.alias("v"),
+        ]
+
+    @staticmethod
+    def _explode_violations(rows: DataFrame) -> DataFrame:
+        """One violation row per struct of ``rows.v`` (rows without any
+        violation are filtered out first)."""
+        return (
+            rows.filter(F.size("v") > 0)
+            .select("conv_id", "turn_idx", F.explode("v").alias("e"), "day")
+            .select(
+                "conv_id",
+                "turn_idx",
+                F.col("e.column").alias("column"),
+                F.col("e.keyword").alias("keyword"),
+                F.col("e.message").alias("message"),
+                F.col("e.path").alias("path"),
+                "day",
+            )
+        )
+
     @staticmethod
     def _fusable_key(d: dict) -> tuple[str, str] | None:
         """(group, order) pair a key check can fuse on, or None."""
@@ -732,8 +747,6 @@ class CheckSuite:
         """One window over (group ORDER BY order) emitting the violation
         structs for every fused key check — same flags as verdict pass B,
         same output shape/messages as the per-check legacy paths."""
-        from pyspark.sql import Window
-
         part = self.partition_by
         k1, k2 = self.keys
         monotone: list[str] = []
@@ -741,38 +754,38 @@ class CheckSuite:
             if d["check"] == "ordering":
                 monotone = d.get("monotone") or []
 
+        memo_key = ("violations", g, o)
+        sel = self._expr_memo.get(memo_key)
+        if sel is None:
+            sel = self._expr_memo[memo_key] = self._violation_rows(
+                self._key_violation_structs(g, o, checks, monotone)
+            )
+        needed = list(dict.fromkeys([part, g, o, *monotone, k1, k2]))
+        return self._explode_violations(df.select(*needed).select(*sel))
+
+    def _key_violation_structs(self, g: str, o: str, checks: list[dict], monotone: list[str]):
+        from pyspark.sql import Window
+
+        k1, k2 = self.keys
         w = Window.partitionBy(g).orderBy(o)
         cur = F.col(o)
         lag_o = F.lag(o).over(w)
         lead_o = F.lead(o).over(w)
         first_o = F.first(o, ignorenulls=True).over(w)
 
-        def struct_of(cols: str, keyword: str, message) -> object:
-            return F.struct(
-                F.lit(cols).alias("column"),
-                F.lit(keyword).alias("keyword"),
-                (F.lit(message) if isinstance(message, str) else message).alias("message"),
-                F.lit("#").alias("path"),
-            )
+        def struct_of(d: dict, keyword: str, message) -> object:
+            return _violation_struct(",".join(d.get("columns", [k1, k2])), keyword, message, "#")
 
         structs = []
         for d in checks:
             if d["check"] == "unique":
                 dup_member = (lag_o == cur) | (lead_o == cur)
-                structs.append(
-                    F.when(
-                        dup_member, struct_of(",".join(d["columns"]), "unique", "duplicate key")
-                    )
-                )
+                structs.append(F.when(dup_member, struct_of(d, "unique", "duplicate key")))
             elif d["check"] == "referential_root":
                 structs.append(
                     F.when(
                         first_o != 0,
-                        struct_of(
-                            ",".join(d.get("columns", [k1, k2])),
-                            "referential",
-                            "conversation has no root turn",
-                        ),
+                        struct_of(d, "referential", "conversation has no root turn"),
                     )
                 )
             elif d["check"] == "ordering":
@@ -791,31 +804,10 @@ class CheckSuite:
                 structs.append(
                     F.when(
                         F.size(F.array_compact(F.array(*issues))) > 0,
-                        struct_of(",".join(d.get("columns", [k1, k2])), "ordering", issue),
+                        struct_of(d, "ordering", issue),
                     )
                 )
-
-        needed = list(dict.fromkeys([part, g, o, *monotone, k1, k2]))
-        return (
-            df.select(*needed)
-            .select(
-                F.col(k1).alias("conv_id"),
-                F.col(k2).cast("int").alias("turn_idx"),
-                F.col(part).alias("day"),
-                F.array_compact(F.array(*structs)).alias("v"),
-            )
-            .filter(F.size("v") > 0)
-            .select("conv_id", "turn_idx", F.explode("v").alias("e"), "day")
-            .select(
-                "conv_id",
-                "turn_idx",
-                F.col("e.column").alias("column"),
-                F.col("e.keyword").alias("keyword"),
-                F.col("e.message").alias("message"),
-                F.col("e.path").alias("path"),
-                "day",
-            )
-        )
+        return F.array_compact(F.array(*structs))
 
     def run(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
         return self.verdicts(df), self.violations(df)

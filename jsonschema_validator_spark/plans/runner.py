@@ -36,6 +36,26 @@ from jsonschema_validator_spark.plans.check_suite import CheckSuite
 from jsonschema_validator_spark.sources.tables import current_snapshot_id, read_table
 
 
+_NO_ROWS = {"rows_checked": 0, "violation_count": 0, "n_checks_failed": 0}
+
+
+def _partition_stats(verdict_rows) -> dict[str, dict[str, int]]:
+    """Manifest lineage metrics per partition from the verdict rows:
+    max rows_checked, summed violation_count and the number of failed
+    checks (NULLs are skipped, as SQL max/sum skip them)."""
+    by_day: dict[str, list] = {}
+    for r in verdict_rows:
+        by_day.setdefault(r["day"], []).append(r)
+    return {
+        day: {
+            "rows_checked": int(max(r["rows_checked"] or 0 for r in rs)),
+            "violation_count": int(sum(r["violation_count"] or 0 for r in rs)),
+            "n_checks_failed": sum(r["pass"] is False for r in rs),
+        }
+        for day, rs in by_day.items()
+    }
+
+
 @dataclass
 class RunReport:
     processed: list[str]
@@ -141,36 +161,24 @@ class CheckpointedRunner:
             sub = df.filter(F.col(part).isin(batch))
             verdicts = self.suite.verdicts(sub)
             violations = self.suite.violations(sub)
-            (
-                verdicts.withColumnRenamed("day", part)
-                if part != "day"
-                else verdicts
-            ).write.mode("overwrite").partitionBy("day").parquet(
-                os.path.join(self.out, "verdicts")
-            )
+            # the verdict rows are tiny (O(partitions x checks)): collect
+            # them once, write them and derive the manifest stats from the
+            # same rows, so unfused dataset checks run once, not twice
+            rows = verdicts.collect()
+            spark.createDataFrame(rows, verdicts.schema).write.mode(
+                "overwrite"
+            ).partitionBy("day").parquet(os.path.join(self.out, "verdicts"))
             violations.write.mode("overwrite").partitionBy("day").parquet(
                 os.path.join(self.out, "violations")
             )
-            # lineage metrics per partition from the (tiny) verdicts frame
-            stats = (
-                verdicts.groupBy("day")
-                .agg(
-                    F.max("rows_checked").alias("rows_checked"),
-                    F.sum("violation_count").alias("violation_count"),
-                    F.sum((~F.col("pass")).cast("int")).alias("n_checks_failed"),
-                )
-                .collect()
-            )
-            by_day = {r["day"]: r for r in stats}
+            stats = _partition_stats(rows)
             self._commit_manifest(
                 [
                     {
                         "partition": p,
                         "spec_hash": self.suite.spec_hash,
                         "status": "done",
-                        "rows_checked": int(by_day[p]["rows_checked"]) if p in by_day else 0,
-                        "violation_count": int(by_day[p]["violation_count"]) if p in by_day else 0,
-                        "n_checks_failed": int(by_day[p]["n_checks_failed"]) if p in by_day else 0,
+                        **stats.get(p, _NO_ROWS),
                         "snapshot_id": snapshot_id,
                     }
                     for p in batch

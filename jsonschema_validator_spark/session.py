@@ -12,6 +12,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap default: half of the host's MemTotal, capped at 16g.
+    The heap fills to whatever cap it is given, so a fixed 16g on a
+    16 GB host gets the driver JVM OOM-killed."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(kb // 2048, 16 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "jsonschema_validator_spark",
     master: str | None = None,
@@ -44,7 +56,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # local-bench default 32m: a GB-scale single-file scan must split

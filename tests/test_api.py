@@ -299,3 +299,62 @@ def test_registry_validate_many(spark):
     ]
     got = [(out[0].valid, kw[0]), (out[1].valid, kw[1])]
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# plan memo: Columns are built once per input schema
+# ---------------------------------------------------------------------------
+
+def test_registry_validate_many_reuses_plan_per_schema(spark, gated_calls):
+    """A second validate_many on a frame of an equal schema builds no
+    check Column; its output equals a freshly created registry's."""
+    rows = [("add", '{"x": 1}'), ("add", '{"x": "one"}'), ("say", '{"msg": "no"}'),
+            ("nope", "{}"), ("add", '{"x":')]
+    schema = "tool string, payload string"
+    reg = _registry(spark)
+    reg.validate_many(spark.createDataFrame(rows, schema), "tool", "payload").collect()
+
+    gated_calls.clear()
+    again = reg.validate_many(spark.createDataFrame(rows, schema), "tool", "payload").collect()
+    assert gated_calls == []
+    fresh = _registry(spark).validate_many(
+        spark.createDataFrame(rows, schema), "tool", "payload"
+    ).collect()
+    assert gated_calls  # the fresh registry did build its Columns
+    assert again == fresh
+    assert [r.valid for r in again] == [True, False, False, False, False]
+
+
+def test_plan_memo_keys_on_input_schema(spark, gated_calls):
+    """A frame of a different schema gets its own plan (its own temp
+    prefix): a user column named like a temp column survives a call made
+    after the plain frame's plan is cached."""
+    s = Schema.create(SCHEMA, spark)
+    plain = spark.createDataFrame([('{"name": "ada"}',)], "j string")
+    assert s.validate_many(plain).first().valid
+    clash = spark.createDataFrame(
+        [("keep-me", '{"name": "ada"}')], "__jsv_pv string, j string"
+    )
+    out = s.validate_many(clash).first()
+    assert out["__jsv_pv"] == "keep-me" and out.valid
+    assert len(s._plans) == 2
+
+    gated_calls.clear()
+    # with_valid adds its fused predicate to the cached plan ...
+    assert s.with_valid(clash, "j").first()["__jsv_pv"] == "keep-me"
+    built = len(gated_calls)
+    assert built
+    # ... and a second plain frame reuses the plain frame's plan whole
+    assert not s.validate_many(
+        spark.createDataFrame([('{"name": "x"}',)], "j string")
+    ).first().valid
+    assert len(gated_calls) == built and len(s._plans) == 2
+
+
+def test_single_document_calls_reuse_plan(spark, schema, gated_calls):
+    schema.is_valid({"name": "ada"})
+    schema.validation_errors({"name": "ada"})
+    gated_calls.clear()
+    assert not schema.is_valid({"name": "x"})
+    assert {e.keyword for e in schema.validation_errors({"name": "x"})} == {"minLength"}
+    assert gated_calls == []

@@ -296,3 +296,17 @@ def test_spec_level_format_assertion(spark):
     assert len(annotated._checks) == 1
     v2 = annotated.verdicts(df)
     assert v2.filter(~F.col("pass")).count() == 0
+
+
+def test_violations_memo_matches_fresh_suite(dirty, gated_calls):
+    """CheckSuite.violations builds its Columns once per input schema:
+    the second call builds no check Column and returns the same rows as
+    a freshly built suite."""
+    df, _ = dirty
+    s = CheckSuite(transcripts_spec()).build()
+    s.violations(df)
+    gated_calls.clear()
+    second = sorted(map(tuple, s.violations(df).collect()), key=repr)
+    assert gated_calls == []
+    fresh = CheckSuite(transcripts_spec()).build().violations(df).collect()
+    assert second == sorted(map(tuple, fresh), key=repr) and len(second) > 0

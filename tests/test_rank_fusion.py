@@ -82,3 +82,31 @@ def test_knn_label_agreement_flags_planted_mislabels(spark):
     out = {r["label"]: r for r in knn_label_agreement(df, "vec_id", "embedding", "label", k=5).collect()}
     assert out[0]["mean_agreement"] > 0.9 and out[0]["n_suspect"] == 0
     assert out[1]["n_suspect"] == 3  # exactly the planted mislabels
+
+
+def test_knn_label_agreement_nullable_int_labels(spark):
+    """NULL labels of a nullable int column reach the worker as NaN: the
+    NULL-label points get NULL agreement (not 0, which would flag them as
+    suspects), and NULL neighbors are left out of the others' means."""
+    from jsonschema_validator_spark.operators.similarity import knn_label_agreement
+
+    # blob A's points all tie at cosine 1, so ranking breaks ties on id:
+    # the NULL-label points (ids 0-2) are every blob-A point's neighbors
+    rows = [(i, [10.0 + i * 0.02, 0.0], None) for i in range(3)]
+    rows += [(i, [10.0 + (i % 5) * 0.01, 0.0], 0) for i in range(3, 23)]
+    rows += [(i, [0.0, 10.0 + (i % 5) * 0.01], 1) for i in range(23, 43)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>, label int")
+    out = {r["label"]: r for r in knn_label_agreement(df, "vec_id", "embedding", "label", k=5).collect()}
+    assert out[None]["n_points"] == 3 and out[None]["mean_agreement"] is None
+    assert not out[None]["n_suspect"]
+    assert out[0]["mean_agreement"] == 1.0 and out[0]["n_suspect"] == 0
+    assert out[1]["mean_agreement"] == 1.0 and out[1]["n_suspect"] == 0
+
+
+def test_knn_label_agreement_single_row_corpus(spark):
+    """One labeled vector has no neighbor: NULL agreement, no error."""
+    from jsonschema_validator_spark.operators.similarity import knn_label_agreement
+
+    df = spark.createDataFrame([(1, [1.0, 0.0], 7)], "vec_id long, embedding array<double>, label int")
+    (r,) = knn_label_agreement(df, "vec_id", "embedding", "label", k=3).collect()
+    assert (r["label"], r["n_points"], r["mean_agreement"]) == (7, 1, None)

@@ -149,3 +149,33 @@ def test_pinned_snapshot_refuses_different_ref(spark, df, tmp_path):
     assert runner.pinned_snapshot(spark, f"snapdir:{root_a}") == 1
     with pytest.raises(ValueError, match="pins spec"):
         runner.pinned_snapshot(spark, f"snapdir:{root_b}")
+
+
+def test_partition_column_not_named_day(spark, tmp_path):
+    """A suite partitioned by a column other than `day` writes verdicts
+    and violations under day=<partition> (both relations name the
+    partition `day`) and commits its manifest stats per partition."""
+    import json
+
+    rows = [("c1", 0, "a"), ("c1", 1, None), ("c2", 0, "b")]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    suite = CheckSuite(
+        {"name": "by_conv", "partition_by": "conv_id", "row": {"required": ["text"]}}
+    ).build()
+    out = str(tmp_path / "out")
+    assert CheckpointedRunner(suite, out).run(df).processed == ["c1", "c2"]
+
+    verdicts = spark.read.parquet(os.path.join(out, "verdicts")).collect()
+    assert {(r.day, r.check, r.violation_count) for r in verdicts} == {
+        ("c1", "required@#text", 1),
+        ("c2", "required@#text", 0),
+    }
+    violations = spark.read.parquet(os.path.join(out, "violations")).collect()
+    assert [(r.day, r.turn_idx, r.keyword) for r in violations] == [("c1", 1, "required")]
+    (manifest,) = os.listdir(os.path.join(out, "_manifest"))
+    with open(os.path.join(out, "_manifest", manifest)) as f:
+        stats = {
+            r["partition"]: (r["rows_checked"], r["violation_count"], r["n_checks_failed"])
+            for r in map(json.loads, f)
+        }
+    assert stats == {"c1": (2, 1, 1), "c2": (1, 0, 0)}
